@@ -253,19 +253,140 @@ def test_retention_join_is_user_keyed(spark):
 
 def test_pagerank_single_lazy_plan_over_cached_base(spark):
     """r13 shape: the five rounds chain lazily into ONE plan whose only
-    data sources are the cached edges/deg frames (InMemoryTableScan) —
-    no per-round checkpoint/broadcast jobs. Each round references the
-    previous round exactly once (linear lineage), so the edge table and
-    the parquet scan beneath it execute once regardless of iteration
-    count; every other appearance reads the cache."""
+    data sources are reads of the cached edge frame (InMemoryTableScan)
+    — no per-round checkpoint or eager broadcast job. Each round
+    references the previous round exactly once (linear lineage), so the
+    edge table and the parquet scan beneath it execute once regardless
+    of iteration count; every other appearance reads the cache."""
+    from zio_kinesis_example_spark.api import clear_shared_cache
     from zio_kinesis_example_spark.operators.analytics import _PR_ITERS
-    plan = _plan(spark, "q_graph_pagerank", mode="simple")
-    # every round reads edges AND deg from the cache: 2 cache reads per
-    # round, +1 for the rank seed
-    assert plan.count("InMemoryTableScan") >= 2 * _PR_ITERS
-    # linear lineage: one aggregation per round plus the seed/degree agg
-    # (each HashAggregate appears twice in 'simple' mode: partial+final)
+    try:
+        plan = _plan(spark, "q_graph_pagerank", mode="simple")
+        # the plan's only sources are reads of the one edge cache, one
+        # per round
+        df = all_specs()["q_graph_pagerank"].fn(spark, SF_SMALL)
+        nodes = _exec_nodes(df._jdf.queryExecution().executedPlan()
+                            .executedPlan())
+        leaves = [_name(n) for n in nodes if n.children().size() == 0]
+        assert leaves == ["InMemoryTableScanExec"] * _PR_ITERS
+    finally:
+        clear_shared_cache()
     assert "ExistingRDD" not in plan  # no checkpoint job in the query
+
+
+def _name(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _stage_plan(node):
+    """The plan under an adaptive query stage wrapper, else the node."""
+    return node.plan() if _name(node).endswith("QueryStageExec") else node
+
+
+def _exec_nodes(node):
+    """Pre-order walk of a physical plan through its children and query
+    stages: a cached frame's build plan is an inner child of its
+    InMemoryTableScan and is not entered."""
+    node = _stage_plan(node)
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _exec_nodes(kids.apply(i))
+
+
+def _unary_down(node, stop):
+    """First node at or below ``node`` along single-child links whose
+    class name is in ``stop`` (or the first non-unary node)."""
+    node = _stage_plan(node)
+    while _name(node) not in stop and node.children().size() == 1:
+        node = _stage_plan(node.children().apply(0))
+    return node
+
+
+def _pagerank_run(spark):
+    """Run q_graph_pagerank at sf0.001; return its rows and its final
+    adaptive plan. The plan is read after the action because the edge
+    cache reports its dst partitioning only once it is built: the
+    initial plan still carries an Exchange that AQE drops when it
+    re-plans the rounds over the materialized cache."""
+    df = all_specs()["q_graph_pagerank"].fn(spark, SF_SMALL)
+    rows = sorted(map(tuple, df.collect()))
+    return rows, df._jdf.queryExecution().executedPlan().executedPlan()
+
+
+def test_pagerank_broadcasts_ranks_over_dst_partitioned_edges(spark):
+    """Each round after the first is a broadcast of the rank vector into
+    a LOCAL join with the dst-partitioned edge cache; every round ends
+    in a local aggregate on dst. Exactly one BroadcastExchange per
+    joined round, each over the previous round's (vertex-sized)
+    aggregate, none over the edge cache, which is every join's streamed
+    side. No Exchange lies between any round's read of the edge cache
+    and its aggregate, and the cache build reuses its one edge exchange
+    for the degree side."""
+    from zio_kinesis_example_spark.api import clear_shared_cache
+    from zio_kinesis_example_spark.operators.analytics import _PR_ITERS
+
+    scan, agg = "InMemoryTableScanExec", "HashAggregateExec"
+    bhj = "BroadcastHashJoinExec"
+    try:
+        _, plan = _pagerank_run(spark)
+        nodes = list(_exec_nodes(plan))
+        bcasts = [n for n in nodes if _name(n) == "BroadcastExchangeExec"]
+        tops = [_unary_down(b.children().apply(0), (scan, agg))
+                for b in bcasts]
+        assert [_name(t) for t in tops] == [agg] * (_PR_ITERS - 1)
+        joins = [n for n in nodes if _name(n) == bhj]
+        assert len(joins) == _PR_ITERS - 1
+        build = _unary_down(joins[0].left(), (scan,)).relation() \
+            .cachedPlan().executedPlan()
+        built = [_name(n) for n in _exec_nodes(build)]
+        # lineitem scanned once per edge direction; the degree side
+        # reads the edge exchange back instead of scanning again
+        assert built.count("FileSourceScanExec") == 2
+        assert "ReusedExchangeExec" in built
+        for j in joins:
+            assert j.buildSide().toString() == "BuildRight"
+            edge = _unary_down(j.left(), (scan,))
+            assert _name(edge) == scan
+            assert "dst" in edge.output().toString()
+        rounds = 0
+        for a in (n for n in nodes if _name(n) == agg):
+            chain, n = [], a
+            while n.children().size() == 1 and _name(n) != bhj:
+                n = _stage_plan(n.children().apply(0))
+                chain.append(_name(n))
+            if _name(n) in (bhj, scan):
+                rounds += 1
+                assert not any("Exchange" in c for c in chain), chain
+        # the final and the partial aggregate of every round
+        assert rounds == 2 * _PR_ITERS
+    finally:
+        clear_shared_cache()
+
+
+def test_pagerank_without_broadcast_matches_default(spark):
+    """With spark.sql.autoBroadcastJoinThreshold=-1 the rounds fall back
+    to shuffle joins: no broadcast anywhere in the executed plan, and
+    rows identical to the default (broadcast) path."""
+    from zio_kinesis_example_spark.api import clear_shared_cache
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    try:
+        default, _ = _pagerank_run(spark)
+        clear_shared_cache()
+        old = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            off, plan = _pagerank_run(spark)
+        finally:
+            spark.conf.set(key, old)
+        names = {_name(n) for n in _exec_nodes(plan)}
+        assert "BroadcastExchangeExec" not in names
+        assert "BroadcastHashJoinExec" not in names
+        assert len(default) > 0
+        assert off == default
+    finally:
+        clear_shared_cache()
 
 
 def test_scd2_single_window_exchange(spark):

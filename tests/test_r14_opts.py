@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 
 from zio_kinesis_example_spark.operators.exact import spread_scan
 
+from .conftest import SF_SMALL
+
 
 def _explain(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
@@ -64,18 +66,22 @@ def test_largestar_round_algebra(spark):
 def test_pagerank_round_joins_halved(spark):
     """r14 pagerank rewrite: outdeg rides the cached edge list
     (edges_deg), so the 5-round optimized plan carries exactly ONE
-    logical Join per round — the old shape's extra pr-deg join per
-    round (10 Join nodes total) is gone."""
+    logical Join per round after the first — the old shape's extra
+    pr-deg join per round (10 Join nodes total) is gone. The first
+    round has none: every seed rank is SCALE, so it reads the edge
+    cache alone."""
     import re
 
+    from zio_kinesis_example_spark.api import clear_shared_cache
     from zio_kinesis_example_spark.operators.analytics import _PR_ITERS
     from zio_kinesis_example_spark.registry import all_specs
 
-    df = all_specs()["q_graph_pagerank"].fn(spark, "/root/testdata/sf0.001")
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert len(re.findall(r"\bJoin\b", plan)) == _PR_ITERS
-    from zio_kinesis_example_spark.api import clear_shared_cache
-    clear_shared_cache()
+    try:
+        df = all_specs()["q_graph_pagerank"].fn(spark, SF_SMALL)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert len(re.findall(r"\bJoin\b", plan)) == _PR_ITERS - 1
+    finally:
+        clear_shared_cache()
 
 
 def test_persist_if_big_fires_only_above_floor(spark):
@@ -99,15 +105,54 @@ def test_persist_if_big_fires_only_above_floor(spark):
         assert "InMemoryRelation" in plan_forced
         # values are persist-invariant
         a = sorted(map(tuple, fn(spark, sf).collect()))
+    finally:
         clear_shared_cache()
+        if old is None:
+            spark.conf.unset("spark.zke.persist.minInputBytes")
+        else:
+            spark.conf.set("spark.zke.persist.minInputBytes", old)
+    try:
+        b = sorted(map(tuple, fn(spark, sf).collect()))
+        assert a == b
+    finally:
+        clear_shared_cache()
+
+
+def test_persist_if_big_skips_unknown_size(spark):
+    """A frame without statistics (RDD-backed) reports Catalyst's
+    Long.MaxValue sentinel as its size. That means unknown, not huge:
+    plan_size_bytes returns None, persist_if_big returns the frame
+    unpersisted even with the floor at 1 byte, and fits_broadcast
+    refuses it."""
+    from zio_kinesis_example_spark.api import clear_shared_cache
+    from zio_kinesis_example_spark.operators.exact import (
+        fits_broadcast, persist_if_big, plan_size_bytes)
+
+    rdd_df = spark.createDataFrame(
+        spark.sparkContext.parallelize([(1, "a"), (2, "b")]),
+        "k long, v string")
+    known = spark.range(2).selectExpr("id AS k", "CAST(id AS STRING) AS v")
+    assert plan_size_bytes(rdd_df) is None
+    # an aggregate scales the sentinel by its row widths: still unknown
+    assert plan_size_bytes(rdd_df.groupBy("k").count()) is None
+    assert plan_size_bytes(known) is not None
+    assert not fits_broadcast(rdd_df)
+    assert fits_broadcast(known)
+    old = spark.conf.get("spark.zke.persist.minInputBytes", None)
+    try:
+        spark.conf.set("spark.zke.persist.minInputBytes", "1")
+        out = persist_if_big(rdd_df)
+        assert out is rdd_df
+        assert not out.storageLevel.useMemory
+        assert not persist_if_big(known.select("k"), ref=rdd_df) \
+            .storageLevel.useMemory
+        assert persist_if_big(known).storageLevel.useMemory
     finally:
         if old is None:
             spark.conf.unset("spark.zke.persist.minInputBytes")
         else:
             spark.conf.set("spark.zke.persist.minInputBytes", old)
-    b = sorted(map(tuple, fn(spark, sf).collect()))
-    assert a == b
-    clear_shared_cache()
+        clear_shared_cache()
 
 
 def test_shuffle_partitions_falls_back_on_non_numeric_conf(spark):

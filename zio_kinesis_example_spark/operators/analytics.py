@@ -21,7 +21,8 @@ from pyspark.sql.window import Window
 
 from ..catalog import load
 from ..registry import query
-from .exact import SQL_MONEY, SQL_REV, money_term, rev_str, ts_lit
+from .exact import (SQL_MONEY, SQL_REV, fits_broadcast, money_term,
+                    rev_str, ts_lit)
 
 
 @query(
@@ -206,33 +207,40 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer PageRank is bit-exact everywhere, so the oracle (the same
     {iters} iterations unrolled as chained CTEs) hash-matches exactly.
 
-    Scale shape (BSP, same posture as connected components): edges and
-    degrees are computed once and cached; each iteration is one
-    co-partitioned join + partial aggregation on dst. Rank mass fits
-    BIGINT while 85·Σpr < 2^63 — at ~10^8+ nodes drop SCALE to 1e6.
-    The 5-iteration unroll is the fixed-depth variant; production runs
-    to a fixpoint with lineage truncation (see llm_dedup cc loop).
+    Scale shape (BSP, same posture as connected components): the edge
+    list with each src's outdeg is built once and cached; each round
+    joins the rank vector to it and sums the contributions per dst (the
+    first round needs no join: every seed rank is SCALE).
+    Rank mass fits BIGINT while 85·Σpr < 2^63 — at ~10^8+ nodes drop
+    SCALE to 1e6. The 5-iteration unroll is the fixed-depth variant;
+    production runs to a fixpoint with lineage truncation (see llm_dedup
+    cc loop). The rounds chain LAZILY into one plan over the one cached
+    frame, so the whole query is a single action, and each round
+    references the previous one exactly once (linear lineage).
 
-    r13 optimization (guide §2.4/§2.6 — remove per-round barriers): the
-    fixed-depth unroll needs NO per-round action, so the five rounds
-    chain LAZILY into one plan over the cached edges/deg frames and the
-    whole query is a single job. The old shape paid a broadcast-build
-    job + a cache materialization per round (33 jobs at sf0.1, most of
-    the wall in scheduling); this one lets AQE pick the rank-side join
-    strategy per round at runtime (broadcast locally; SMJ/SHJ on a
-    cluster where |nodes| outgrows the threshold — the strategy is no
-    longer hard-coded into the plan). Each round references the
-    previous round exactly once, so lineage stays linear and nothing is
-    recomputed; edges/deg are loose-tracked persists (the llm_dedup
-    registry), released by clear_shared_cache()/LRU instead of an
-    eager end-of-query checkpoint job. Measured interleaved min-of-4
-    at sf0.1: 3.98 s → 3.45 s, jobs 33 → ~14 (AQE stages), results
-    hash-identical.
+    Round shape, decided ONCE from the Catalyst estimate of the
+    vertex-sized degree frame against the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (``exact.fits_broadcast``):
 
-    SINGLE-ACTION CONTRACT (r14, ADVICE r13): the returned frame stays
-    lineage-dependent on the two loose-tracked persists; the "edges
-    scanned once" property holds for any actions taken while those
-    caches live. A ``clear_shared_cache()`` (or LRU eviction) between
+    - fits: the edge cache is hash-partitioned by dst, and every joined
+      round broadcasts the rank vector (one row per vertex) into a local
+      join with the edge cache and a local aggregate on dst — no edge
+      row crosses the network after the build. The hints pin that choice:
+      unhinted, AQE may broadcast the cached EDGE side (BuildLeft) or
+      plan a sort-merge join over it; on the 10x proxy it did the
+      latter for one round.
+    - does not fit (too big, unknown, or threshold -1): no hint and no
+      repartition; each joined round is a shuffle join on src, every
+      round a partial-aggregated shuffle on dst, and a graph whose
+      vertex set outgrows the threshold never broadcasts.
+
+    Either way the values are identical: each round sums the same
+    multiset of exact integer (dst, pr DIV outdeg) terms.
+
+    SINGLE-ACTION CONTRACT: the returned frame stays lineage-dependent on
+    the loose-tracked edge cache (the llm_dedup registry); the "edges
+    scanned once" property holds for any actions taken while that
+    cache lives. A ``clear_shared_cache()`` (or LRU eviction) between
     caller actions recomputes the 5-round chain from the parquet scan —
     values stay correct, only the single-scan guarantee resets. The
     bench/oracle drivers take exactly one action per build, which is
@@ -242,42 +250,54 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .llm_dedup import _track_persist
 
     li = load(spark, sf_dir, "lineitem")
-    # ONE distinct after the union (not one per direction): both
-    # directions ride a single exchange — measured 4× cheaper than
-    # dedup-then-mirror, which pays the distinct shuffle twice or forces
-    # an extra materialization.
-    edges = _track_persist(
+    pairs = li.select(
+        (F.col("l_partkey") * 2).alias("src"),
+        (F.col("l_suppkey") * 2 + 1).alias("dst"),
+    ).unionByName(
         li.select(
-            (F.col("l_partkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        ).unionByName(
-            li.select(
-                (F.col("l_suppkey") * 2 + 1).alias("src"),
-                (F.col("l_partkey") * 2).alias("dst"),
-            )
-        ).distinct()
-    )
-    deg = _track_persist(
-        edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")))
-    # r14 (guide §2.4 — one join per round instead of two): outdeg is a
-    # per-src constant, so attach it to the edge list ONCE and cache
-    # the result; each round then joins pr against edges_deg alone
-    # (rate = pr DIV outdeg computed on the joined row — the identical
-    # multiset of (dst, rate) terms, so every round's sum is unchanged
-    # bit-for-bit). The old shape paid a pr⋈deg shuffle join per round
-    # on top of the edges⋈rates one — 10 round-joins; now 5.
-    edges_deg = _track_persist(edges.join(deg, "src"))
-    pr = deg.select(F.col("src").alias("node"),
-                    F.lit(_PR_SCALE).cast("long").alias("pr"))
-    base = _PR_SCALE * 15 // 100
-    for _ in range(_PR_ITERS):
-        pr = (
-            edges_deg.join(pr, edges_deg.src == pr.node)
-            .select("dst", F.expr("pr DIV outdeg").alias("rate"))
-            .groupBy(F.col("dst").alias("node"))
-            .agg((F.lit(base) + F.expr("(85 * sum(rate)) DIV 100"))
-                 .alias("pr"))
+            (F.col("l_suppkey") * 2 + 1).alias("src"),
+            (F.col("l_partkey") * 2).alias("dst"),
         )
+    )
+
+    def out_degrees(edges):
+        return edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+
+    # An aggregate's estimate scales its child's, so the degree frame of
+    # the raw pairs estimates the same size as that of the deduplicated
+    # edges.
+    local = fits_broadcast(out_degrees(pairs))
+    if local:
+        # repartition BEFORE the one distinct: hash(dst) already
+        # satisfies the distinct's (src, dst) clustering, so the build
+        # keeps a single edge exchange and the cache stays dst-partitioned
+        pairs = pairs.repartition(spark.sparkContext.defaultParallelism,
+                                  "dst")
+    # ONE distinct after the union (not one per direction): both
+    # directions ride a single exchange.
+    edges = pairs.distinct()
+    deg = out_degrees(edges)
+    # outdeg is a per-src constant, so it rides the cached edge list and
+    # a round is at most one join (rate = pr DIV outdeg on its row).
+    # edges feeds both join sides inside this one cached plan, where AQE
+    # reuses its exchange: the build scans lineitem and shuffles the
+    # edge pairs once.
+    edges_deg = _track_persist(
+        edges.join(F.broadcast(deg) if local else deg, "src"))
+    base = _PR_SCALE * 15 // 100
+
+    def round_from(rates):
+        return rates.groupBy(F.col("dst").alias("node")).agg(
+            (F.lit(base) + F.expr("(85 * sum(rate)) DIV 100")).alias("pr"))
+
+    # every seed rank is SCALE, so the first round needs no join
+    pr = round_from(edges_deg.select(
+        "dst", F.expr(f"{_PR_SCALE} DIV outdeg").alias("rate")))
+    for _ in range(_PR_ITERS - 1):
+        ranks = F.broadcast(pr) if local else pr
+        pr = round_from(
+            edges_deg.join(ranks, edges_deg.src == ranks.node)
+            .select("dst", F.expr("pr DIV outdeg").alias("rate")))
     return pr.select(
         "node", (F.col("node") % 2).cast("int").alias("is_supplier"), "pr"
     )

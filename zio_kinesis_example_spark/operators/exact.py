@@ -65,6 +65,42 @@ def spread_scan(df):
 #: instead of 3–8×. Override via spark.zke.persist.minInputBytes.
 PERSIST_MIN_INPUT_BYTES = 8 * 1024 * 1024
 
+#: Catalyst's "no statistics" size (``spark.sql.defaultSizeInBytes``,
+#: Long.MaxValue): a source without stats, e.g. an RDD-backed frame,
+#: reports it. The operators above such a source scale it by their row
+#: widths, so the plan's own estimate may land on either side of it.
+_UNKNOWN_SIZE = 2**63 - 1
+
+
+def _size(plan) -> int:
+    return int(str(plan.stats().sizeInBytes()))
+
+
+def plan_size_bytes(df) -> int | None:
+    """Catalyst's size estimate of ``df`` in bytes
+    (``optimizedPlan().stats().sizeInBytes``: static plan info, no job),
+    or ``None`` when it is unknown: when the plan or any of its leaves
+    reports the Long.MaxValue sentinel. Callers treat an unknown size
+    as "do not persist, do not broadcast"."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    if any(_size(leaves.apply(i)) >= _UNKNOWN_SIZE
+           for i in range(leaves.size())):
+        return None
+    size = _size(plan)
+    return None if size >= _UNKNOWN_SIZE else size
+
+
+def fits_broadcast(df) -> bool:
+    """True when ``df``'s known size estimate is within the session's
+    ``spark.sql.autoBroadcastJoinThreshold``, the same test Spark's
+    planner applies to an unhinted join side. False for an unknown
+    estimate and for a threshold of -1 (broadcasts disabled)."""
+    threshold = (df.sparkSession._jsparkSession.sessionState().conf()
+                 .autoBroadcastJoinThreshold())
+    size = plan_size_bytes(df)
+    return size is not None and size <= threshold
+
 
 def persist_if_big(df, ref=None):
     """Tracked persist of a multi-consumer frame, CONDITIONAL on the
@@ -86,7 +122,8 @@ def persist_if_big(df, ref=None):
 
     Pass ``ref`` when the deciding input is not the frame itself (e.g.
     persist the small per-user anchor frame when the EVENTS SCAN it
-    shields is big)."""
+    shields is big). An unknown estimate (:func:`plan_size_bytes` is
+    None) never persists."""
     src = df if ref is None else ref
     spark = df.sparkSession
     try:
@@ -94,9 +131,8 @@ def persist_if_big(df, ref=None):
                                    str(PERSIST_MIN_INPUT_BYTES)))
     except ValueError:
         floor = PERSIST_MIN_INPUT_BYTES
-    size = int(str(
-        src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    if size < floor:
+    size = plan_size_bytes(src)
+    if size is None or size < floor:
         return df
     from .llm_dedup import _track_persist
     return _track_persist(df)

@@ -29,6 +29,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import sys
 import time
 
 import pyarrow as pa
@@ -36,19 +37,23 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 SRC = "/root/testdata/sf0.1"
+#: the repository root, which holds bench.py
+_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
 
 #: compute-dense kernels whose sf0.1 wall is NOT floor-dominated: the
 #: portable-hash dedup family, the quadratic-probe joins, the heaviest
-#:  TPC-H aggregation/join chains, the decimal flagship, and the ANN
-#: BLAS kernel. (Multimodal codecs excluded: their payload fixtures
-#: are not covered by the rolled-table builders.)
+#:  TPC-H aggregation/join chains, the decimal flagship, the ANN
+#: BLAS kernel, and the PageRank power iteration. (Multimodal codecs
+#: excluded: their payload fixtures are not covered by the rolled-table
+#: builders.)
 HEAVY_SET = [
     "q_dedup_simhash", "q_dedup_minhash_pairs", "q_dedup_ngram_jaccard",
     "q_dedup_simhash_pairs", "q_curate_pipeline",
     "q_join_interval_overlap", "q_join_interval_overlap_capped",
     "q_join_grid_neighbors", "q_agg_group",
     "q_tpch_q7", "q_tpch_q9", "q_tpch_q21",
-    "q_sim_ann_ivfpq",
+    "q_sim_ann_ivfpq", "q_graph_pagerank",
 ]
 
 #: doc_id copy offset — above the sf0.1 doc_id domain (r14: max doc_id
@@ -110,6 +115,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     specs = all_specs()
     names = args.queries.split(",") if args.queries else HEAVY_SET
+    if _ROOT not in sys.path:
+        sys.path.insert(0, _ROOT)
     import bench as _b  # repo-root bench.py: the warmup + noop force
     _b.warmup(spark, SRC)
     for name in names:
